@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from binlog_processer_spark.corpus import corpus_spark_df
 from binlog_processer_spark.functions.parse import (
     corrupt_expr,
+    keyed_events,
     parse_raw,
     serialize_expr,
     split_quarantine,
@@ -522,12 +523,9 @@ def entry(spark: SparkSession) -> DataFrame:
     raw = c.select(
         corrupt_expr(serialize_expr(), F.col("doc_num"), F.col("r")).alias("raw")
     )
-    good, _bad = split_quarantine(parse_raw(raw))
-    good = good.withColumn(
-        "table_key",
-        F.concat_ws("#", F.col("source"), F.col("bucket").cast("string")),
+    enriched = enrich_routing(
+        keyed_events(parse_raw(raw)), _routing(spark, sf_dir)
     )
-    enriched = enrich_routing(good, _routing(spark, sf_dir))
     kept, _ign = split_ignored(filter_system_schemas(enriched))
     kept = apply_soft_delete(kept)
     routed = fan_out_trees(with_envelope(kept))
@@ -1115,13 +1113,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         routing = _routing(spark, sf_dir)
 
         def to_kept(batch):
-            good, _ = split_quarantine(parse_raw(batch))
-            good = good.withColumn(
-                "table_key",
-                F.concat_ws(
-                    "#", F.col("source"), F.col("bucket").cast("string")
-                ),
-            )
+            good = keyed_events(parse_raw(batch))
             kept, _ = split_ignored(
                 filter_system_schemas(enrich_routing(good, routing))
             )
@@ -1146,13 +1138,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         routing = _routing(spark, sf_dir)
 
         def to_kept(batch):
-            good, _ = split_quarantine(parse_raw(batch))
-            good = good.withColumn(
-                "table_key",
-                F.concat_ws(
-                    "#", F.col("source"), F.col("bucket").cast("string")
-                ),
-            )
+            good = keyed_events(parse_raw(batch))
             kept, _ = split_ignored(
                 filter_system_schemas(enrich_routing(good, routing))
             )
@@ -1175,13 +1161,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         routing = _routing(spark, sf_dir)
 
         def to_kept(batch):
-            good, _ = split_quarantine(parse_raw(batch))
-            good = good.withColumn(
-                "table_key",
-                F.concat_ws(
-                    "#", F.col("source"), F.col("bucket").cast("string")
-                ),
-            )
+            good = keyed_events(parse_raw(batch))
             kept, _ = split_ignored(
                 filter_system_schemas(enrich_routing(good, routing))
             )

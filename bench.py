@@ -9,9 +9,8 @@ local[4]/local[16] runs (the sandbox stand-in for N vs 4N executor clusters —
 driver instruction) in fresh subprocesses on IDENTICAL input, each pair
 bracketed by its own memory-bandwidth probe so pipeline and host ceiling are
 measured in the same window. Writes BENCH/BASELINE.md with MEDIAN (not best)
-raw efficiency eff = (T_4 / T_16) / 4 and median host-normalized efficiency,
-plus a per-stage attribution table from a profiled pair (≥0.8 target per
-north rule).
+raw efficiency eff = (T_4 / T_16) / 4 and median host-normalized efficiency
+(≥0.8 target per north rule).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all), SPARK_GRAFT_BENCH_DOCS (corpus size).
@@ -95,10 +94,7 @@ def run_pipeline_bench(
     cpus: int,
     n_docs: int,
     keep_session: bool = False,
-    with_metrics: bool = True,
-    profile: bool = False,
     warmup: bool = True,
-    write_clustering: str = "rebalance",
     max_tok: int = 64,
 ) -> dict:
     """Materialize raw input to parquet, then measure read→parse→enrich→
@@ -163,7 +159,6 @@ def run_pipeline_bench(
                 routing_dim(spark),
                 os.path.join(tmp, "warm_out"),
                 resume=False,
-                with_metrics=with_metrics,
             )
             shutil.rmtree(os.path.join(tmp, "warm_out"), ignore_errors=True)
 
@@ -188,9 +183,6 @@ def run_pipeline_bench(
             routing_dim(spark),
             os.path.join(tmp, "out"),
             resume=False,
-            with_metrics=with_metrics,
-            profile=profile,
-            write_clustering=write_clustering,
         )
         wall = time.time() - t0
         gc_sec = round((_gc_ms() - gc0) / 1000, 3)
@@ -204,8 +196,6 @@ def run_pipeline_bench(
             "rows_routed": res.metrics["rows_routed"],
             "pipeline_sec": round(wall, 3),
             "throughput_seq_per_sec": round(n_events / wall, 1),
-            "with_metrics": with_metrics,
-            "write_clustering": write_clustering,
             "routed_files": len(res.tables["routed"].data_files()),
             "phase_sec": res.metrics.get("phase_sec", {}),
             # measured bytes, not plan claims: shuffle ≪ input is the
@@ -421,15 +411,11 @@ def _taskset(cpus: int, pin: bool) -> list[str]:
     return ["taskset", "-c", f"0-{cpus - 1}"] if pin else []
 
 
-def _pipeline_subprocess(
-    cpus: int, n_docs: int, profile: bool = False, pin: bool = False
-) -> dict:
+def _pipeline_subprocess(cpus: int, n_docs: int, pin: bool = False) -> dict:
     cmd = _taskset(cpus, pin) + [
         sys.executable, __file__, "--pipeline-only", "--cpus", str(cpus),
         "--docs", str(n_docs),
     ]
-    if profile:
-        cmd.append("--profile")
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
@@ -485,8 +471,7 @@ def scaling_run(
     probe_lo) inside one host window, so the ratio and the host ceiling
     it is normalized against are measured under the same interference.
     The host's noisy-neighbor load varies by HOURS, so the campaign's
-    medians — not any single window — are the reported figures. The final
-    pair runs --profile for the per-stage attribution table.
+    medians — not any single window — are the reported figures.
     """
     lo, hi = levels
     assert hi == 4 * lo, "levels must be (N, 4N)"
@@ -515,7 +500,7 @@ def scaling_run(
                 and isinstance(json.loads(l)["pair"], int)
             )
 
-    def _measure_pair(idx, kind: str, profiled: bool = False) -> bool:
+    def _measure_pair(idx, kind: str) -> bool:
         """One probed A/B pair with window-stability validation.
 
         Probes run BEFORE the 4-way leg and AFTER the 16-way leg (both at
@@ -535,7 +520,7 @@ def scaling_run(
             r4 = _nulljob_subprocess(lo, n_docs, pin=pin)
             t4_key = "null_sec"
         else:
-            r4 = _pipeline_subprocess(lo, n_docs, profile=profiled, pin=pin)
+            r4 = _pipeline_subprocess(lo, n_docs, pin=pin)
             t4_key = "pipeline_sec"
         # gate the 16-way leg separately: a burst that arrived during the
         # 4-way leg would otherwise contaminate the 16-way one. Threshold
@@ -544,7 +529,7 @@ def scaling_run(
         if not _wait_quiet(max_load=2.5, timeout_s=240):
             with open(hist_path, "a") as f:
                 f.write(json.dumps({
-                    "campaign": campaign, "pair": idx, "profiled": profiled,
+                    "campaign": campaign, "pair": idx, "profiled": False,
                     "levels": [lo, hi], "pinned": pin,
                     "control": kind == "control", "discarded": True,
                     "aborted": "load before hi leg",
@@ -558,7 +543,7 @@ def scaling_run(
         if kind == "control":
             r16 = _nulljob_subprocess(hi, n_docs, pin=pin)
         else:
-            r16 = _pipeline_subprocess(hi, n_docs, profile=profiled, pin=pin)
+            r16 = _pipeline_subprocess(hi, n_docs, pin=pin)
         with _pin_cores(lo if pin else None):
             bw4b = _bandwidth_probe(lo)
             cpu4b = _cpu_probe(lo)
@@ -582,7 +567,9 @@ def scaling_run(
             "pair": idx,
             "levels": [lo, hi],
             "pinned": pin,
-            "profiled": profiled,
+            # history rows from earlier campaigns include profiled pairs
+            # (never in medians); the reader filters on this key
+            "profiled": False,
             "control": kind == "control",
             "discarded": not stable,
             "t4": r4[t4_key],
@@ -622,10 +609,6 @@ def scaling_run(
     # not the engine's operators.
     for a in range(3):
         if _measure_pair(f"control-{idx0 + a}", "control"):
-            break
-    # profiled pair last (stage attribution; never in medians)
-    for a in range(3):
-        if _measure_pair(f"profiled-{idx0 + a}", "pipeline", profiled=True):
             break
     scaling_report()
 
@@ -674,55 +657,6 @@ def _manual_block() -> str:
             return "\n" + f.read()
     except OSError:
         return ""
-
-
-def _ab_block() -> str:
-    """Routed-write clustering A/B (BENCH/ab_write_clustering.jsonl):
-    interleaved salt vs AQE-rebalance pipeline runs in one quiet host
-    window. The measurement behind the r4 default flip to 'rebalance'."""
-    try:
-        with open("BENCH/ab_write_clustering.jsonl") as f:
-            runs = [json.loads(l) for l in f if l.strip()]
-    except OSError:
-        return ""
-    if not runs:
-        return ""
-    by = {"salt": [], "rebalance": []}
-    for r in runs:
-        by.get(r.get("write_clustering", ""), []).append(r)
-    if not (by["salt"] and by["rebalance"]):
-        return ""
-
-    def med(xs):
-        xs = sorted(xs)
-        return xs[len(xs) // 2]
-
-    rows = "\n".join(
-        f"| {r['write_clustering']} | {r['pipeline_sec']} |"
-        f" {r['routed_files']} | {r['phase_sec'].get('route_write', '?')} |"
-        for r in runs
-    )
-    ms, mr = (med([r["pipeline_sec"] for r in by[k]])
-              for k in ("salt", "rebalance"))
-    return (
-        "\n## Routed-write clustering A/B (salt-4 vs AQE rebalance)\n\n"
-        "Interleaved alternating runs, one quiet host window, local[16],\n"
-        "same corpus; content proven byte-identical by\n"
-        "tests/test_pipeline_e2e.py. 'salt' hash-repartitions on\n"
-        "(db, table, bucket(4, doc_id)) — deterministic ≤4 files/dir;\n"
-        "'rebalance' lets AQE size write tasks from actual shuffle bytes —\n"
-        "small sinks coalesce to one file, hot sinks split by data size.\n"
-        f"Medians: salt **{ms} s**, rebalance **{mr} s** "
-        f"({(mr - ms) / ms * 100:+.0f}%); rebalance won every pair and is\n"
-        "the pipeline default since r4. Re-adding the bucket column to the\n"
-        "rebalance hint scattered each sink's cells across the hash space,\n"
-        "restoring the 350-file salt layout and its wall time — at this SF\n"
-        "the win IS one-writer-per-small-sink (at production scale, where\n"
-        "every (sink, bucket) cell exceeds the advisory partition size,\n"
-        "the bucket column comes back for free — see route.py docstring).\n\n"
-        "| clustering | pipeline (s) | routed files | route_write (s) |\n"
-        "|---|---|---|---|\n" + rows + "\n"
-    )
 
 
 def scaling_report() -> None:
@@ -785,7 +719,6 @@ def scaling_report() -> None:
             "retained last for continuity with earlier rounds.\n\n"
             + "\n".join(sections)
             + _headline_block()
-            + _ab_block()
             + "\nMethodology. Two parallelism levels on one box stand in for\n"
             "N vs 4N executor clusters per the driver's instruction; input,\n"
             "code, and configs are identical at both levels of a pair. Each\n"
@@ -1090,15 +1023,8 @@ def main() -> None:
                     help="run the parse-less control job (read→shuffle→write)")
     ap.add_argument("--cpus", type=int, default=CPUS)
     ap.add_argument("--docs", type=int, default=None)
-    ap.add_argument("--no-metrics", action="store_true",
-                    help="run the pipeline without per-batch parse-latency "
-                         "stamping (cost-of-metrics comparison)")
-    ap.add_argument("--profile", action="store_true",
-                    help="materialize the parse cache as its own action so "
-                         "phase_sec attributes parse separately")
     ap.add_argument("--pairs", type=int, default=5,
-                    help="interleaved A/B pairs for --scaling (plus one "
-                         "profiled pair for the stage table)")
+                    help="interleaved A/B pairs for --scaling")
     ap.add_argument("--campaign-id", type=int, default=None,
                     help="append pairs to an existing campaign instead of "
                          "starting a new one (grows the median pool)")
@@ -1109,9 +1035,6 @@ def main() -> None:
                     metavar=("N", "4N"),
                     help="core counts for the two scaling legs (must be "
                          "N and 4N)")
-    ap.add_argument("--write-clustering", default="rebalance",
-                    choices=["salt", "rebalance"],
-                    help="routed-write clustering strategy (pipeline-only)")
     ap.add_argument("--max-tok", type=int, default=64,
                     help="max tokens per generated doc (1..N zipf-ish). 64 "
                          "is the fast unit-shape; 1024+ benches the "
@@ -1138,9 +1061,7 @@ def main() -> None:
     if args.pipeline_only:
         print(json.dumps(run_pipeline_bench(
             args.cpus, n_docs,
-            with_metrics=not args.no_metrics, profile=args.profile,
             warmup=not args.no_warmup,
-            write_clustering=args.write_clustering,
             max_tok=args.max_tok,
         )))
         return

@@ -391,3 +391,14 @@ def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     good = parsed.filter(F.col("status") == "OK").drop("raw", "status")
     bad = parsed.filter(F.col("status") != "OK").select("status", "raw")
     return good, bad
+
+
+def keyed_events(parsed: DataFrame) -> DataFrame:
+    """Good rows of ``parsed`` with the routing key: the wire's (source,
+    bucket) pair is the TABLE_MAP key (tableId analogue), ``table_key =
+    source#bucket`` — the join key of ``enrich_routing``."""
+    good, _ = split_quarantine(parsed)
+    return good.withColumn(
+        "table_key",
+        F.concat_ws("#", F.col("source"), F.col("bucket").cast("string")),
+    )

@@ -1,5 +1,5 @@
-"""Routing: filters, image selection, soft-delete window, dual partition
-trees, and the fan-out write layout.
+"""Routing: filters, image selection, soft-delete, dual partition trees,
+and the fan-out partition layout.
 
 Reference parity:
 - P1 system-schema filter (BinlogFileReader.java:188-190)
@@ -8,17 +8,18 @@ Reference parity:
 - P3 soft-delete strategy: a per-(db, table) flag toggled by `archive_table`
   sign rows; while set, later Delete events are dropped
   (BinlogFileReader.java:218-234, IgnoreStrategy.java:10-30). Order-dependent
-  → expressed as a running `last(sign, ignoreNulls)` window over event_seq.
+  → expressed as a floor lookup over event_seq into a broadcast sign timeline.
 - P4 row-image selection: Create/Update write the After image, Delete writes
   the Before image (PartitionWriterManager.java:141-152).
 - S5 dual partition trees: every record lands in BOTH the create-date tree and
   the update-date tree (PartitionWriterManager.java:62-66,118-137) →
   a 2-way explode on a (tree, tree_ts) array, then partitionBy.
 
-Scale posture: all of this is expressions + one window. The window shuffles by
-(database, table) — low cardinality but potentially hot; the subsequent write
-reuses that clustering. Fan-out is `partitionBy(tree, database, table, day)`
-on a single pass — no per-sink job loop, no driver-side iteration.
+Scale posture: all of this is expressions + broadcast joins. The one fact
+shuffle is the optional pre-write rebalance by (database, table) — low
+cardinality but potentially hot, so AQE splits it by size. Fan-out is
+`partitionBy(*PARTITION_COLS)` on a single pass — no per-sink job loop, no
+driver-side iteration.
 """
 
 from __future__ import annotations
@@ -112,10 +113,10 @@ def _floor_flag_expr() -> F.Column:
     return F.expr("get(filter(__sign_tl, v -> v.event_seq <= event_seq), 0).sign")
 
 
-def soft_delete_flag(
+def apply_soft_delete(
     df: DataFrame, timeline: DataFrame | None = None
 ) -> DataFrame:
-    """P3: running archive flag per sink; NULL sign rows don't change it.
+    """P3: drop Delete events while the archive flag is set.
 
     Broadcast floor-lookup against the sign timeline instead of a
     `last(sign, ignoreNulls) OVER (... ROWS UNBOUNDED PRECEDING)` window:
@@ -123,27 +124,11 @@ def soft_delete_flag(
     propagate a handful of administrative flags. Same result, zero fact
     shuffle.
 
-    ``timeline``: precomputed ``_sign_timeline`` output. Default (None)
+    ``timeline``: precomputed ``sign_timeline`` output. Default (None)
     derives it from ``df`` — a second scan of the fact when the caller
     hasn't persisted upstream; callers composing several soft-delete-aware
     queries over the same events compute it once and pass it (same pattern
     as ``reconcile``/``repair`` accepting ``fs``).
-    """
-    joined = df.join(
-        F.broadcast(timeline if timeline is not None else _sign_timeline(df)),
-        ["database_name", "table_name"],
-        "left",
-    )
-    return joined.withColumn("archive_flag", _floor_flag_expr()).drop("__sign_tl")
-
-
-def apply_soft_delete(
-    df: DataFrame, timeline: DataFrame | None = None
-) -> DataFrame:
-    """P3: drop Delete events while the archive flag is set.
-
-    ``timeline``: see ``soft_delete_flag`` — pass a precomputed sign
-    timeline to avoid re-deriving it from ``df``.
     """
     joined = df.join(
         F.broadcast(timeline if timeline is not None else _sign_timeline(df)),
@@ -201,68 +186,24 @@ def route(
 
     Returns (routed rows ready for partitioned write, ignored-count side agg).
 
-    cluster_for_write: repartition by (database, table) BEFORE the 2-way tree
-    explode — each sink partition dir then gets written by one task (the
-    reference's one-writer-per-sink-path invariant,
-    PartitionWriterManager.java:139-167) and the shuffle moves each token
-    array once, not twice. Off (False) by default so pure query composition
-    stays shuffle-free. Two clustering strategies:
-
-    - ``True`` / ``"salt"``: hash-repartition on (db, table, bucket-4 of
-      doc_id). Sink sizes are skewed (hot tables), and a plain hash of
-      ~sinks keys leaves straggler reducers; the salt splits each sink
-      across <=4 tasks (bounded files-per-dir) while evening the load —
-      the aggregation analogue lives in operators/skew.py.
-      pmod(xxhash64(doc_id), 4) is exactly Iceberg's bucket(4, doc_id)
-      partition transform, so the physical clustering matches the mandated
-      (source-derived sink, bucket(doc_id)) layout.
-    - ``"rebalance"``: AQE rebalance hint on (db, table) — Spark sizes the
-      write tasks at runtime from the actual shuffle bytes
-      (advisoryPartitionSizeInBytes): hot sinks split by DATA SIZE instead
-      of a fixed 4, and many small sinks coalesce into one task (one file
-      per dir instead of up to 4) — the write.distribution-mode=hash +
-      target-file-size posture, so file count tracks data volume at any
-      scale. Measured r4 A/B at sf0.1 (3 interleaved quiet-host pairs,
-      local[16]): rebalance won every pair — median pipeline 8.24 s vs
-      9.56 s salt (−14%), 95 files vs 350 (BENCH/BASELINE.md "routed-write
-      clustering A/B") — and is therefore the pipeline default. The hint
-      deliberately omits the bucket(4, doc_id) column: hashing it scatters
-      each sink's four cells across the partition space, so AQE can no
-      longer give a small sink one writer (measured: re-adding it restored
-      the 350-file layout and the salt-level wall time). At production
-      scale, where every (sink, bucket) cell exceeds the advisory
-      partition size, add the bucket column back — splitting then happens
-      within cells and the mandated bucket clustering is preserved for
-      free; at any scale where cells are below it, the column only
-      fragments files.
+    cluster_for_write (truthy, e.g. ``"rebalance"``): AQE rebalance hint on
+    (database, table) BEFORE the 2-way tree explode — each sink partition dir
+    is then written by one task (the reference's one-writer-per-sink-path
+    invariant, PartitionWriterManager.java:139-167), the shuffle moves each
+    token array once, not twice, and Spark sizes the write tasks at runtime
+    from the actual shuffle bytes (advisoryPartitionSizeInBytes): hot sinks
+    split by data size, small sinks coalesce into one task. Off by default
+    so pure query composition stays shuffle-free. The hint omits a
+    bucket(doc_id) column on purpose: hashing it scatters each sink's cells
+    across the partition space, so AQE can no longer give a small sink one
+    writer; add it back only where every (sink, bucket) cell exceeds the
+    advisory partition size.
     """
     df = filter_system_schemas(enriched)
     kept, ignored_counts = split_ignored(df)
     kept = apply_soft_delete(kept, timeline=sign_timeline)
     kept = with_envelope(kept)
-    if cluster_for_write == "rebalance":
+    if cluster_for_write:
         kept = kept.hint("rebalance", "database_name", "table_name")
-    elif cluster_for_write:
-        kept = kept.repartition(
-            "database_name",
-            "table_name",
-            F.pmod(F.xxhash64("doc_id"), F.lit(4)),
-        )
     routed = fan_out_trees(kept)
     return routed, ignored_counts
-
-
-def write_routed(routed: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    """Fan-out write, one pass, partitioned by sink key + day.
-
-    Reference wrote one Avro file per (tree, instance, db, table, date) with a
-    temp→rename commit (PartitionWriterManager.java:98-137); here the layout is
-    Hive-style partition dirs and atomicity comes from the storage layer
-    (storage/table.py manifest commit — the Iceberg-snapshot stand-in since no
-    Iceberg runtime jar ships in this environment).
-    """
-    (
-        routed.write.mode(mode)
-        .partitionBy(*PARTITION_COLS)
-        .parquet(out_dir)
-    )

@@ -4,9 +4,9 @@ This is the Spark restatement of the reference's resolve entry point
 (SURVEY.md §3.1, binlog-main BinlogMain.java → TaskProcessor → BinlogFileReader
 → PartitionWriterManager): one linear DataFrame DAG instead of MQ + thread
 pools. The raw-event scan + parse + broadcast enrich + routing expressions run
-shuffle-free inside one codegen stage; the only shuffles are the soft-delete
-window (which doubles as the fan-out write clustering) and the final
-aggregates (keyed by sink).
+shuffle-free inside one codegen stage; the only shuffles are the pre-write
+rebalance by sink (the fan-out write clustering) and the final aggregates
+(keyed by sink).
 """
 
 from __future__ import annotations
@@ -15,11 +15,10 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parse import parse_raw, split_quarantine
+from ..functions.parse import keyed_events, parse_raw, split_quarantine
 from ..operators import aggregate as agg
 from ..operators.enrich import enrich_routing
 from ..operators.resume import ProcessedManifest, remaining_events
@@ -39,26 +38,28 @@ def run_pipeline(
     routing_df: DataFrame,
     out_dir: str,
     resume: bool = True,
-    with_metrics: bool = True,
-    profile: bool = False,
     stats_columns: list[str] | None = None,
-    write_clustering: str = "rebalance",
 ) -> PipelineResult:
     """raw_df: one `raw` string column (the serialized event log).
     routing_df: broadcast dimension (table_key → sink attributes).
     Writes snapshot tables under out_dir; returns metrics + table handles.
 
-    ``with_metrics=False`` drops the per-batch parse-latency stamping (and
-    its percentiles from the result) — the latency column rides the persisted
-    relation through the whole job, so benchmarks measure both settings.
-    ``profile=True`` materializes the parse cache as its own action so
-    ``phase_sec`` attributes parse separately from the write (same total
-    work — the write then reads the cache — but one extra cache pass).
+    ``resume``: skip input files already in the processed-file manifest and
+    append the increment (False overwrites the routed table).
+    ``stats_columns``: routed-table columns to record per-file zone maps for.
     """
     t0 = time.time()
     phases: dict[str, float] = {}
     manifest = ProcessedManifest(os.path.join(out_dir, "_processed.json"))
     already_done = manifest.load() if resume else set()
+
+    def _enrich(parsed: DataFrame) -> DataFrame:
+        # the parse-latency stamp has served the observation; routing and
+        # storage never read it (a no-op on an unstamped parse)
+        good = keyed_events(parsed).drop("parse_batch_us")
+        if resume:
+            good = remaining_events(good, already_done)
+        return enrich_routing(good, routing_df)
 
     # ONE physical parse pass, ZERO extra materializations: the quarantine
     # count and the parse-latency percentiles ride the write action as an
@@ -69,36 +70,15 @@ def run_pipeline(
     # 10^12 rows it would be a second copy of the corpus. The quarantine
     # ROWS (not just the count) are re-derived by a second parse only when
     # the observed count is nonzero — the cold repair path, never the hot one.
-    parsed = parse_raw(raw_df, with_metrics=with_metrics)
     obs = Observation("parse_metrics")
     obs_exprs = [
         F.sum((F.col("status") != "OK").cast("long")).alias("n_quarantine"),
+        F.percentile_approx("parse_batch_us", [0.5, 0.95, 0.99])
+        .alias("lat_pcts"),
     ]
-    if with_metrics:
-        obs_exprs.append(
-            F.percentile_approx("parse_batch_us", [0.5, 0.95, 0.99])
-            .alias("lat_pcts")
-        )
-    parsed = parsed.observe(obs, *obs_exprs)
-    if profile:
-        # profile mode: materialize the parse separately so phase_sec can
-        # attribute it (costs the cache pass the production path no longer has)
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-        t = time.time()
-        parsed.count()
-        phases["parse_persist"] = round(time.time() - t, 3)
-    good, _ = split_quarantine(parsed)
-    if with_metrics:
-        good = good.drop("parse_batch_us")
-    # the wire's (source, bucket) is the TABLE_MAP key (tableId analogue)
-    good = good.withColumn(
-        "table_key",
-        F.concat_ws("#", F.col("source"), F.col("bucket").cast("string")),
+    enriched = _enrich(
+        parse_raw(raw_df, with_metrics=True).observe(obs, *obs_exprs)
     )
-    if resume:
-        good = remaining_events(good, already_done)
-
-    enriched = enrich_routing(good, routing_df)
     # Soft-delete needs the sign timeline, and deriving it from `enriched`
     # (route()'s default) re-executes the whole scan→parse subtree as the
     # broadcast-subquery job — a SECOND full hex-decode of every token
@@ -113,16 +93,9 @@ def run_pipeline(
     sign_sliver = raw_df.filter(
         F.split_part(F.col("raw"), F.lit("|"), F.lit(10)) != F.lit("")
     )
-    sliver_good, _ = split_quarantine(parse_raw(sign_sliver, with_metrics=False))
-    sliver_good = sliver_good.withColumn(
-        "table_key",
-        F.concat_ws("#", F.col("source"), F.col("bucket").cast("string")),
-    )
-    if resume:
-        sliver_good = remaining_events(sliver_good, already_done)
-    timeline = sign_timeline(enrich_routing(sliver_good, routing_df))
+    timeline = sign_timeline(_enrich(parse_raw(sign_sliver)))
     # cluster_for_write: the one fact shuffle in the whole plan — pre-explode
-    # repartition by sink so each partition dir is written by one task.
+    # rebalance by sink so each partition dir is written by one task.
     # The envelope keeps `before`/`after` as derived views for queries, but
     # only `img` is persisted/written: the three structs share one token
     # array, and tripling it would triple shuffle, cache, and parquet bytes
@@ -132,7 +105,7 @@ def run_pipeline(
     # the aggregates below re-read the committed parquet with the token
     # column pruned away (a few % of the written bytes).
     routed, ignored_counts = route(
-        enriched, cluster_for_write=write_clustering, sign_timeline=timeline
+        enriched, cluster_for_write=True, sign_timeline=timeline
     )
     # storage flattens the image: img.doc_id / img.n_tok always equal the
     # top-level columns (with_envelope builds the image from the same row),
@@ -157,173 +130,167 @@ def run_pipeline(
         "n_tok",
         F.col("img.tokens").alias("img_tokens"),
     )
+    tables = {
+        name: SnapshotTable(os.path.join(out_dir, name))
+        for name in (
+            "routed",
+            "sink_counts",
+            "watermarks",
+            "histograms",
+            "lineage",
+            "quarantine",
+        )
+    }
+    t = time.time()
+    tables["routed"].write(
+        routed,
+        partition_by=PARTITION_COLS,
+        mode="overwrite" if not resume else "append",
+        # opt-in zone maps (e.g. ["commit_ts"]): one footer pass at
+        # commit; selective readers then plan file-skipping from the
+        # manifest (SnapshotTable.read_where)
+        stats_columns=stats_columns,
+    )
+    phases["route_write"] = round(time.time() - t, 3)
+    # aggregates reflect the committed table (not just the increment) so
+    # a resumed run republishes complete counts — the reference
+    # re-derives counts from t_binlog_process_log the same way
+    # (BaseDataCompare.java:38-67). One column-pruned scan feeds all four
+    # outputs via a shared super-key rollup.
+    t = time.time()
+    committed = tables["routed"].read(spark)
+    sink_counts, wm, hist, lineage, rollup_base = agg.single_pass_rollups(committed)
+
+    # materialize the shared rollup ONCE before fanning out publishes —
+    # otherwise the concurrent jobs below race to compute the same cached
+    # partitions
+    rollup_base.count()
+    phases["rollup"] = round(time.time() - t, 3)
+
+    # the four aggregate outputs are tiny (per-sink cardinality, one file
+    # each) but each publish is its own Spark job whose submit + commit
+    # tail is serial; at higher core counts those fixed tails dominate the
+    # wall clock (they don't parallelize), so publish CONCURRENTLY —
+    # Spark's scheduler handles multi-threaded job submission natively
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _publish_lineage():
+        # lineage is one row per file×sink: collect once, reuse for the
+        # manifest and the routed-row metric without further scans
+        rows = lineage.collect()
+        tables["lineage"].write(spark.createDataFrame(rows, lineage.schema))
+        return rows
+
+    # observed during the routed write — no extra pass over parsed
     try:
-        tables = {
-            name: SnapshotTable(os.path.join(out_dir, name))
-            for name in (
-                "routed",
-                "sink_counts",
-                "watermarks",
-                "histograms",
-                "lineage",
-                "quarantine",
-            )
-        }
-        t = time.time()
-        tables["routed"].write(
-            routed,
-            partition_by=PARTITION_COLS,
-            mode="overwrite" if not resume else "append",
-            # opt-in zone maps (e.g. ["commit_ts"]): one footer pass at
-            # commit; selective readers then plan file-skipping from the
-            # manifest (SnapshotTable.read_where)
-            stats_columns=stats_columns,
+        observed = obs.get
+    except Exception:
+        # AQE's runtime empty-relation propagation can replace the whole
+        # map subtree (including the CollectMetrics node) with an empty
+        # LocalTableScan when the write increment turns out empty — e.g.
+        # a fully-resumed rerun — and the observation then surfaces as a
+        # schema-less row that fails to deserialize. Recompute the two
+        # scalars with an explicit aggregate; this rare path re-parses,
+        # but only on runs that wrote nothing.
+        row = parse_raw(raw_df, with_metrics=True).agg(
+            *obs_exprs
+        ).collect()[0]
+        observed = row.asDict()
+    n_quarantine = int(observed["n_quarantine"] or 0)
+    lat = observed["lat_pcts"]
+    lat_p50, lat_p95, lat_p99 = lat if lat else (None, None, None)
+
+    t = time.time()
+    with ThreadPoolExecutor(max_workers=6) as ex:
+        f_lineage = ex.submit(_publish_lineage)
+        f_pub = [
+            ex.submit(tables["sink_counts"].write, sink_counts.coalesce(1)),
+            ex.submit(tables["watermarks"].write, wm.coalesce(1)),
+            ex.submit(tables["histograms"].write, hist.coalesce(1)),
+        ]
+        lineage_rows = f_lineage.result()
+        for f in f_pub:
+            f.result()
+    rollup_base.unpersist()
+    phases["publish"] = round(time.time() - t, 3)
+
+    if n_quarantine:
+        # cold path: re-parse to recover the quarantine ROWS (the hot
+        # path only ever needs the count, which the observation carried)
+        _, bad_rows = split_quarantine(parse_raw(raw_df))
+        tables["quarantine"].write(bad_rows)
+
+    # one atomic catalog version pins every table this run committed:
+    # a reader between the routed commit and a rollup commit sees the
+    # PREVIOUS consistent set, never new data with stale counts
+    # (storage/catalog.py). One JSON write.
+    from ..storage.catalog import Catalog
+
+    Catalog(out_dir).commit(
+        {
+            name: t.current_snapshot()
+            for name, t in tables.items()
+            if t.current_snapshot() is not None
+        },
+        note="pipeline",
+    )
+
+    # lineage spans the whole committed table; metrics report THIS run's
+    # increment (the reference's per-run t_binlog_process_log semantics)
+    files_done = sorted({r.file_id for r in lineage_rows})
+    new_files = [f for f in files_done if f not in already_done]
+    n_routed = sum(
+        r.routed_cnt for r in lineage_rows if r.file_id not in already_done
+    )
+    manifest.mark(files_done)
+
+    metrics = {
+        "rows_routed": n_routed,
+        "rows_failed": n_quarantine,
+        "files_processed": len(new_files),
+        # per-Arrow-batch parse wall time percentiles (BASELINE metrics
+        # contract: rows parsed/routed/failed + parse-latency pcts)
+        "parse_batch_us_p50": lat_p50,
+        "parse_batch_us_p95": lat_p95,
+        "parse_batch_us_p99": lat_p99,
+        "wall_sec": round(time.time() - t0, 3),
+        "phase_sec": phases,
+    }
+    # run-health report (the reference's t_binlog_process_report +
+    # Prometheus counters, DBbiz.java:133-156 / PrometheusMetrics.java):
+    # one narrow metric/value snapshot per run, next to lineage —
+    # zero extra scans (cardinalities fold the collected lineage
+    # rows) and one tiny single-file commit after wall_sec is
+    # stamped (it reports that wall).
+    from ..operators.report import (
+        REPORT_SCHEMA_DDL,
+        process_report_rows,
+    )
+
+    rpt_rows = process_report_rows(
+        metrics,
+        routed_files=len(tables["routed"].data_files()),
+        # sink/tree cardinalities from the rows _publish_lineage
+        # already collected — the report adds ZERO scans to the run
+        lineage_rows=lineage_rows,
+    )
+    rpt_tbl = SnapshotTable(os.path.join(out_dir, "process_report"))
+    from pyspark.sql.types import _parse_datatype_string
+
+    try:
+        # driver-side single-file commit: no Spark job for 20 rows
+        rpt_tbl.write_rows(
+            rpt_rows,
+            _parse_datatype_string(REPORT_SCHEMA_DDL),
+            mode="append",
         )
-        phases["route_write"] = round(time.time() - t, 3)
-        # aggregates reflect the committed table (not just the increment) so
-        # a resumed run republishes complete counts — the reference
-        # re-derives counts from t_binlog_process_log the same way
-        # (BaseDataCompare.java:38-67). One column-pruned scan feeds all four
-        # outputs via a shared super-key rollup.
-        t = time.time()
-        committed = tables["routed"].read(spark)
-        sink_counts, wm, hist, lineage, rollup_base = agg.single_pass_rollups(committed)
-
-        # materialize the shared rollup ONCE before fanning out publishes —
-        # otherwise the concurrent jobs below race to compute the same cached
-        # partitions
-        rollup_base.count()
-        phases["rollup"] = round(time.time() - t, 3)
-
-        # the four aggregate outputs are tiny (per-sink cardinality, one file
-        # each) but each publish is its own Spark job whose submit + commit
-        # tail is serial; at higher core counts those fixed tails dominate the
-        # wall clock (they don't parallelize), so publish CONCURRENTLY —
-        # Spark's scheduler handles multi-threaded job submission natively
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _publish_lineage():
-            # lineage is one row per file×sink: collect once, reuse for the
-            # manifest and the routed-row metric without further scans
-            rows = lineage.collect()
-            tables["lineage"].write(spark.createDataFrame(rows, lineage.schema))
-            return rows
-
-        # observed during the routed write — no extra pass over parsed
-        try:
-            observed = obs.get
-        except Exception:
-            # AQE's runtime empty-relation propagation can replace the whole
-            # map subtree (including the CollectMetrics node) with an empty
-            # LocalTableScan when the write increment turns out empty — e.g.
-            # a fully-resumed rerun — and the observation then surfaces as a
-            # schema-less row that fails to deserialize. Recompute the two
-            # scalars with an explicit aggregate; this rare path re-parses,
-            # but only on runs that wrote nothing.
-            row = parse_raw(raw_df, with_metrics=with_metrics).agg(
-                *obs_exprs
-            ).collect()[0]
-            observed = row.asDict()
-        n_quarantine = int(observed["n_quarantine"] or 0)
-        lat = observed.get("lat_pcts") if with_metrics else None
-        lat_p50, lat_p95, lat_p99 = lat if lat else (None, None, None)
-
-        t = time.time()
-        with ThreadPoolExecutor(max_workers=6) as ex:
-            f_lineage = ex.submit(_publish_lineage)
-            f_pub = [
-                ex.submit(tables["sink_counts"].write, sink_counts.coalesce(1)),
-                ex.submit(tables["watermarks"].write, wm.coalesce(1)),
-                ex.submit(tables["histograms"].write, hist.coalesce(1)),
-            ]
-            lineage_rows = f_lineage.result()
-            for f in f_pub:
-                f.result()
-        rollup_base.unpersist()
-        phases["publish"] = round(time.time() - t, 3)
-
-        if n_quarantine:
-            # cold path: re-parse to recover the quarantine ROWS (the hot
-            # path only ever needs the count, which the observation carried)
-            _, bad_rows = split_quarantine(
-                parse_raw(raw_df, with_metrics=False)
-            )
-            tables["quarantine"].write(bad_rows)
-
-        # one atomic catalog version pins every table this run committed:
-        # a reader between the routed commit and a rollup commit sees the
-        # PREVIOUS consistent set, never new data with stale counts
-        # (storage/catalog.py). One JSON write.
-        from ..storage.catalog import Catalog
-
-        Catalog(out_dir).commit(
-            {
-                name: t.current_snapshot()
-                for name, t in tables.items()
-                if t.current_snapshot() is not None
-            },
-            note="pipeline",
+    except ValueError:
+        # URI-rooted warehouse: fall back to the Spark write path
+        rpt_tbl.write(
+            spark.createDataFrame(
+                rpt_rows, schema=REPORT_SCHEMA_DDL
+            ).coalesce(1),
+            mode="append",
         )
-
-        # lineage spans the whole committed table; metrics report THIS run's
-        # increment (the reference's per-run t_binlog_process_log semantics)
-        files_done = sorted({r.file_id for r in lineage_rows})
-        new_files = [f for f in files_done if f not in already_done]
-        n_routed = sum(
-            r.routed_cnt for r in lineage_rows if r.file_id not in already_done
-        )
-        manifest.mark(files_done)
-
-        metrics = {
-            "rows_routed": n_routed,
-            "rows_failed": n_quarantine,
-            "files_processed": len(new_files),
-            # per-Arrow-batch parse wall time percentiles (BASELINE metrics
-            # contract: rows parsed/routed/failed + parse-latency pcts)
-            "parse_batch_us_p50": lat_p50,
-            "parse_batch_us_p95": lat_p95,
-            "parse_batch_us_p99": lat_p99,
-            "wall_sec": round(time.time() - t0, 3),
-            "phase_sec": phases,
-        }
-        # run-health report (the reference's t_binlog_process_report +
-        # Prometheus counters, DBbiz.java:133-156 / PrometheusMetrics.java):
-        # one narrow metric/value snapshot per run, next to lineage —
-        # zero extra scans (cardinalities fold the collected lineage
-        # rows) and one tiny single-file commit after wall_sec is
-        # stamped (it reports that wall).
-        from ..operators.report import (
-            REPORT_SCHEMA_DDL,
-            process_report_rows,
-        )
-
-        rpt_rows = process_report_rows(
-            metrics,
-            routed_files=len(tables["routed"].data_files()),
-            # sink/tree cardinalities from the rows _publish_lineage
-            # already collected — the report adds ZERO scans to the run
-            lineage_rows=lineage_rows,
-        )
-        rpt_tbl = SnapshotTable(os.path.join(out_dir, "process_report"))
-        from pyspark.sql.types import _parse_datatype_string
-
-        try:
-            # driver-side single-file commit: no Spark job for 20 rows
-            rpt_tbl.write_rows(
-                rpt_rows,
-                _parse_datatype_string(REPORT_SCHEMA_DDL),
-                mode="append",
-            )
-        except ValueError:
-            # URI-rooted warehouse: fall back to the Spark write path
-            rpt_tbl.write(
-                spark.createDataFrame(
-                    rpt_rows, schema=REPORT_SCHEMA_DDL
-                ).coalesce(1),
-                mode="append",
-            )
-        tables["process_report"] = rpt_tbl
-        return PipelineResult(metrics=metrics, tables=tables)
-    finally:
-        if profile:
-            parsed.unpersist()
+    tables["process_report"] = rpt_tbl
+    return PipelineResult(metrics=metrics, tables=tables)

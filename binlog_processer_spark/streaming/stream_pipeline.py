@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parse import parse_raw, split_quarantine
+from ..functions.parse import keyed_events, parse_raw, split_quarantine
 from ..operators import aggregate as agg
 from ..operators.enrich import enrich_routing
 from ..operators.route import route
@@ -52,11 +52,7 @@ def run_streaming_pipeline(
     raw = reader.parquet(raw_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        good, _bad = split_quarantine(parse_raw(batch_df))
-        good = good.withColumn(
-            "table_key",
-            F.concat_ws("#", F.col("source"), F.col("bucket").cast("string")),
-        )
+        good = keyed_events(parse_raw(batch_df))
         routed, _ign = route(enrich_routing(good, routing_df))
         batch_counts = agg.sink_counts(routed).withColumn(
             "batch_id", F.lit(batch_id)

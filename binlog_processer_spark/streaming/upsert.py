@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parse import parse_raw, split_quarantine
+from ..functions.parse import keyed_events, parse_raw
 from ..operators import aggregate as agg
 from ..operators.enrich import enrich_routing
 from ..operators.route import filter_system_schemas, split_ignored
@@ -98,11 +98,7 @@ def run_streaming_upsert(
     raw = reader.parquet(raw_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        good, _bad = split_quarantine(parse_raw(batch_df))
-        good = good.withColumn(
-            "table_key",
-            F.concat_ws("#", F.col("source"), F.col("bucket").cast("string")),
-        )
+        good = keyed_events(parse_raw(batch_df))
         kept, _ign = split_ignored(
             filter_system_schemas(enrich_routing(good, routing_df))
         )

@@ -44,12 +44,6 @@ def main() -> None:
                          "per partition per run; see jobs/run_compact.py for "
                          "the standalone/offline form)")
     ap.add_argument("--compact-target-mb", type=int, default=128)
-    ap.add_argument("--write-clustering", default="rebalance",
-                    choices=["salt", "rebalance"],
-                    help="routed-write clustering: 'salt' (deterministic "
-                         "bucket(4, doc_id) layout, the mandated partition "
-                         "transform) or 'rebalance' (AQE size-targeted "
-                         "write tasks — fewer, advisory-sized files)")
     ap.add_argument("--stats-columns", metavar="COLS",
                     help="comma-separated routed-table columns to record "
                          "per-file min/max zone maps for at commit "
@@ -73,7 +67,6 @@ def main() -> None:
         stats_columns=(
             args.stats_columns.split(",") if args.stats_columns else None
         ),
-        write_clustering=args.write_clustering,
     )
     metrics = dict(res.metrics)
     if args.compact:

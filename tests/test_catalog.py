@@ -99,11 +99,13 @@ def test_pipeline_commits_a_consistent_catalog_version(tmp_path):
         assert SnapshotTable(os.path.join(wh, name)).current_snapshot() == snap
 
 
-def test_compact_advances_catalog_and_expiry_respects_pins(tmp_path, spark):
-    """The hole this guards: pipeline commits catalog v0 pinning routed@0;
-    compaction rewrites routed to snap 1; expiry with keep_last=1 must not
-    vacuum what the (advanced) catalog reads, and the catalog must point
-    at the compacted snapshot."""
+def test_compact_advances_catalog_and_expiry_respects_pins(
+    tmp_path, spark, split_raw_inputs
+):
+    """The hole this guards: two resumed pipeline runs commit catalog v0
+    and v1 (v1 pins routed@1); compaction rewrites routed to snap 2;
+    expiry with keep_last=1 must not vacuum what the (advanced) catalog
+    reads, and the catalog must point at the compacted snapshot."""
     import subprocess
     import sys
     import os
@@ -123,26 +125,27 @@ def test_compact_advances_catalog_and_expiry_respects_pins(tmp_path, spark):
         )
 
     wh = str(tmp_path / "wh")
-    # salt clustering on purpose: the test NEEDS a fragmented routed table
-    # for compaction to have work (the default rebalance write produces
-    # right-sized files — the compactor correctly no-ops on it)
-    _run(["jobs/run_pipeline.py", "--generate", "20000", "--output", wh,
-          "--write-clustering", "salt"])
+    part, full = split_raw_inputs
+    # the test NEEDS a fragmented routed table for compaction to have
+    # work: two resumed runs append a file per run to each sink partition
+    # (one run's rebalanced write is right-sized — the compactor no-ops)
+    _run(["jobs/run_pipeline.py", "--input", part, "--output", wh])
+    _run(["jobs/run_pipeline.py", "--input", full, "--output", wh])
     cat = Catalog(wh)
-    v0_routed = cat.pins()["routed"]
+    v1_routed = cat.pins()["routed"]
 
     m = _run(["jobs/run_compact.py", "--warehouse", wh, "--expire-keep", "1"])
     assert m["committed"] is True and m["groups"] > 0
-    assert m["catalog_version"] == 1
+    assert m["catalog_version"] == 2
     assert m["snapshots_expired"] >= 1
 
     # catalog advanced to the compacted snapshot and reads cleanly
-    assert cat.current_version() == 1
-    assert cat.pins()["routed"] == m["snapshot"] != v0_routed
+    assert cat.current_version() == 2
+    assert cat.pins()["routed"] == m["snapshot"] != v1_routed
     n = cat.read(spark, "routed").count()
     assert n > 0
-    # the stale version's file was trimmed with the same retention depth
-    assert [d["version"] for d in cat.history()] == [1]
+    # the stale versions' files were trimmed with the same retention depth
+    assert [d["version"] for d in cat.history()] == [2]
 
 
 def test_catalog_versions_never_reuse_after_rollback(spark, tmp_path):

@@ -156,16 +156,17 @@ def test_compact_cli_zorder(spark, tmp_path):
     assert tbl.read(spark).count() == 4096
 
 
-def test_pipeline_cli_inline_compact(tmp_path):
+def test_pipeline_cli_inline_compact(tmp_path, split_raw_inputs):
     """--compact bin-packs the routed table right after the run commits and
     the warehouse still verifies clean against the replica derivation."""
     wh = str(tmp_path / "wh")
-    # salt clustering: 20k docs under the salted write spreads each sink
-    # partition over several tasks -> several files, giving the inline
-    # compactor work (the default rebalance write is already right-sized
-    # and the compactor correctly no-ops on it)
-    m = _run(["jobs/run_pipeline.py", "--generate", "20000", "--output", wh,
-              "--compact", "--write-clustering", "salt"])
+    part, full = split_raw_inputs
+    # two resumed runs: the second appends a file to every sink partition
+    # the first wrote, giving the inline compactor work (one run's
+    # rebalanced write is already right-sized and the compactor no-ops)
+    _run(["jobs/run_pipeline.py", "--input", part, "--output", wh])
+    m = _run(["jobs/run_pipeline.py", "--input", full, "--output", wh,
+              "--compact"])
     assert m["rows_routed"] > 0
     assert m["compact_groups"] > 0
     assert m["compact_files_merged"] > m["compact_groups"]

@@ -20,6 +20,11 @@ def test_pipeline_end_to_end(spark, tmp_path):
     res = run_pipeline(spark, _raw(spark), routing_dim(spark), out)
     assert res.metrics["rows_failed"] == 0
     assert res.metrics["rows_routed"] > 0
+    # the metrics contract benchmark harnesses read: per-phase walls and
+    # the always-on parse-latency percentiles
+    assert set(res.metrics["phase_sec"]) == {"route_write", "rollup", "publish"}
+    for p in ("p50", "p95", "p99"):
+        assert res.metrics[f"parse_batch_us_{p}"] is not None
 
     routed = res.tables["routed"].read(spark)
     counts = res.tables["sink_counts"].read(spark)
@@ -95,33 +100,6 @@ def test_pipeline_fully_resumed_rerun_metrics_survive_empty_increment(
     assert (
         r2.tables["routed"].read(spark).count()
         == r1.tables["routed"].read(spark).count()
-    )
-
-
-def test_pipeline_rebalance_clustering_equivalent_fewer_files(
-    spark, tmp_path
-):
-    """write_clustering='rebalance' (AQE size-targeted write tasks, the
-    default since the r4 A/B) must produce byte-identical table content to
-    the salt-4 layout — clustering changes file layout only — with no more
-    data files."""
-    a = run_pipeline(
-        spark, _raw(spark), routing_dim(spark), str(tmp_path / "a"),
-        write_clustering="salt",
-    )
-    b = run_pipeline(
-        spark, _raw(spark), routing_dim(spark), str(tmp_path / "b"),
-        write_clustering="rebalance",
-    )
-    ra = a.tables["routed"].read(spark)
-    rb = b.tables["routed"].read(spark)
-    assert ra.count() == rb.count()
-    assert ra.exceptAll(rb).isEmpty() and rb.exceptAll(ra).isEmpty()
-    ca = {tuple(r) for r in a.tables["sink_counts"].read(spark).collect()}
-    cb = {tuple(r) for r in b.tables["sink_counts"].read(spark).collect()}
-    assert ca == cb
-    assert len(b.tables["routed"].data_files()) <= len(
-        a.tables["routed"].data_files()
     )
 
 
